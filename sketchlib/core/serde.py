@@ -111,3 +111,23 @@ def sketch_from_bytes(data: bytes):
     if cls is None:
         raise ValueError(f"unknown sketch type id {type_id}")
     return cls._from_parts(header, payload)
+
+
+def merge_blobs(blobs, context: str | None = None):
+    """Deserialize the first blob and merge the rest into it, in the
+    order given — the one fold behind every merge site (merge tree,
+    rollup, incremental update, local build, SQL sketch_merge).
+    The lattice sketches are order-free, but KLL and t-digest bytes
+    depend on the order, so each caller sorts by its own total order
+    first. ``context`` prefixes a merge error (e.g. incompatible
+    params) with the caller's description of the group."""
+    it = iter(blobs)
+    sk = sketch_from_bytes(bytes(next(it)))
+    for blob in it:
+        try:
+            sk.merge(sketch_from_bytes(bytes(blob)))
+        except ValueError as e:
+            if context is None:
+                raise
+            raise ValueError(f"{context}: {e}") from e
+    return sk

@@ -16,6 +16,13 @@ OR-merge :139-164) with the Spark-native architecture from SURVEY.md §4:
                           optional two-level (salted) fan-in for very
                           wide clusters, treeAggregate-style.
 
+One fold serves every merge here: each merge-tree level, the narrow
+single-partition fold, ``rollup_sketches``, ``incremental_update`` and
+the collect-and-fold ``build_sketches_local`` sort a group's rows into
+their own fixed order and hand the blobs to ``serde.merge_blobs``.
+Every sketch-table row is built by ``_group_row`` under the one
+``_sketch_table_schema``.
+
 At 100 TB: the shuffle volume is (#input_partitions × #groups ×
 sketch_bytes) regardless of row count — the property that makes the
 reference's design scale, preserved verbatim.
@@ -34,13 +41,14 @@ import pyarrow.compute as pa_compute
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
-                               StructField, StructType)
+                               StructField, StructType,
+                               _parse_datatype_string)
 
 from sketchlib.core.cms import CountMinSketch
 from sketchlib.core.sample import WeightedBottomKSample
 from sketchlib.core.countsketch import CountSketch
 from sketchlib.core.params import bloom_params
-from sketchlib.core.serde import sketch_from_bytes
+from sketchlib.core.serde import merge_blobs
 from sketchlib.spark.specs import SketchSpec
 
 
@@ -290,18 +298,36 @@ def build_partials(df: DataFrame, group_cols: list[str],
     return sel.mapInPandas(fn, schema)
 
 
-def _merged_schema(partials: DataFrame, group_cols: list[str]) -> StructType:
-    return StructType(_group_fields(partials, group_cols) + [
+def _sketch_table_schema(df: DataFrame, group_cols: list[str],
+                         readout: list | None = None) -> StructType:
+    """The sketch-table output schema: (group_cols..., sketch_name,
+    sketch, n_rows, n_partials), then one nullable column per fused
+    ``readout`` entry."""
+    return StructType(_group_fields(df, group_cols) + [
         StructField("sketch_name", StringType(), False),
         StructField("sketch", BinaryType(), False),
         StructField("n_rows", LongType(), False),
         StructField("n_partials", LongType(), False),
-    ])
+    ] + [StructField(col, _parse_datatype_string(dtype), True)
+         for col, dtype, _fn in readout or ()])
 
 
-def _parse_dtype(dtype: str):
-    from pyspark.sql.types import _parse_datatype_string
-    return _parse_datatype_string(dtype)
+def _group_row(keys: list[str], key: tuple, pdf: pd.DataFrame,
+               blob_col: str = "sketch", readout: list | None = None,
+               context: str | None = None) -> pd.DataFrame:
+    """One sketch-table row from one group's rows, which the caller has
+    already sorted into its merge order: the folded blob, summed n_rows
+    and n_partials (a partial row counts as one), and each ``readout``
+    ``fn(sketch_name, sketch)`` run on the merged sketch."""
+    sk = merge_blobs(pdf[blob_col], context)
+    return pd.DataFrame({
+        **{c: [key[i]] for i, c in enumerate(keys)},
+        "sketch": [sk.to_bytes()],
+        "n_rows": [int(pdf["n_rows"].sum())],
+        "n_partials": [int(pdf["n_partials"].sum()) if "n_partials" in pdf
+                       else len(pdf)],
+        **{col: [fn(key[-1], sk)] for col, _dtype, fn in readout or ()},
+    })
 
 
 def merge_partials(partials: DataFrame, group_cols: list[str],
@@ -342,36 +368,14 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
     if fanout == "auto":
         nparts = partials.rdd.getNumPartitions()
         fanout = _auto_fanout(nparts)
-    out_schema = _merged_schema(partials, group_cols)
-    if readout is not None:
-        out_schema = StructType(out_schema.fields + [
-            StructField(col, _parse_dtype(dtype), True)
-            for col, dtype, _fn in readout])
+    out_schema = _sketch_table_schema(partials, group_cols, readout)
     keys = [*group_cols, "sketch_name"]
 
-    def _fold_sorted(pdf):
-        """Deterministic fold shared by both merge levels."""
-        pdf = pdf.sort_values(["partition_id", "chunk"], kind="stable")
-        sk = sketch_from_bytes(bytes(pdf["partial"].iloc[0]))
-        for blob in pdf["partial"].iloc[1:]:
-            sk.merge(sketch_from_bytes(bytes(blob)))
-        return sk, pdf
+    def in_order(pdf):
+        return pdf.sort_values(["partition_id", "chunk"], kind="stable")
 
     def merge_fn(key, pdf):
-        sk, pdf = _fold_sorted(pdf)
-        extra = {}
-        if readout is not None:
-            name = key[len(keys) - 1]
-            for col, _dtype, fn in readout:
-                extra[col] = [fn(name, sk)]
-        return pd.DataFrame({
-            **{c: [key[i]] for i, c in enumerate(keys)},
-            "sketch": [sk.to_bytes()],
-            "n_rows": [int(pdf["n_rows"].sum())],
-            "n_partials": [int(pdf["n_partials"].sum()) if "n_partials" in pdf
-                           else len(pdf)],
-            **extra,
-        })
+        return _group_row(keys, key, in_order(pdf), "partial", readout)
 
     plan = list(fanout) if isinstance(fanout, (list, tuple)) else \
         ([int(fanout)] if fanout and fanout > 1 else [])
@@ -418,29 +422,16 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
         return partials.mapInPandas(fold_partition, out_schema)
 
     if plan:
-        mid_schema = StructType(_group_fields(partials, group_cols) + [
-            StructField("sketch_name", StringType(), False),
-            StructField("partial", BinaryType(), False),
-            StructField("n_rows", LongType(), False),
-            StructField("partition_id", IntegerType(), False),
-            StructField("chunk", IntegerType(), False),
-            StructField("n_partials", LongType(), False),
-        ])
+        mid_schema = _partials_schema(partials, group_cols).add(
+            "n_partials", LongType(), False)
 
         def level_fn(key, pdf, bucket):
-            sk, pdf = _fold_sorted(pdf)
-            return pd.DataFrame({
-                **{c: [key[i]] for i, c in enumerate(keys)},
-                "partial": [sk.to_bytes()],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                # bucket index becomes next level's partition_id: the
-                # fold order at every level is then a pure function of
-                # the tree shape, not of task scheduling
-                "partition_id": [int(bucket)],
-                "chunk": [0],
-                "n_partials": [int(pdf["n_partials"].sum())
-                               if "n_partials" in pdf else len(pdf)],
-            })
+            # bucket index becomes next level's partition_id: the fold
+            # order at every level is then a pure function of the tree
+            # shape, not of task scheduling
+            return (_group_row(keys, key, in_order(pdf), "partial")
+                    .rename(columns={"sketch": "partial"})
+                    .assign(partition_id=int(bucket), chunk=0))
 
         level = partials
         for buckets in plan:
@@ -452,20 +443,6 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
         return level.groupBy(*keys).applyInPandas(merge_fn, out_schema)
 
     return partials.groupBy(*keys).applyInPandas(merge_fn, out_schema)
-
-
-def _fold_blobs(pdf: pd.DataFrame, context: str | None = None):
-    """Deserialize + fold-merge one group's sketch blobs (shared by
-    rollup_sketches and incremental_update merge tasks)."""
-    sk = sketch_from_bytes(bytes(pdf["sketch"].iloc[0]))
-    for blob in pdf["sketch"].iloc[1:]:
-        try:
-            sk.merge(sketch_from_bytes(bytes(blob)))
-        except ValueError as e:
-            if context:
-                raise ValueError(f"{context}: {e}") from e
-            raise
-    return sk
 
 
 def rollup_sketches(sketches: DataFrame, from_cols: list[str],
@@ -496,42 +473,21 @@ def rollup_sketches(sketches: DataFrame, from_cols: list[str],
         raise ValueError(f"to_cols {missing} not in from_cols {from_cols}")
     dropped = [c for c in from_cols if c not in to_cols]
     keys = [*to_cols, "sketch_name"]
-    out_schema = StructType(_group_fields(sketches, to_cols) + [
-        StructField("sketch_name", StringType(), False),
-        StructField("sketch", BinaryType(), False),
-        StructField("n_rows", LongType(), False),
-        StructField("n_partials", LongType(), False),
-    ])
-    if readout is not None:
-        out_schema = StructType(out_schema.fields + [
-            StructField(col, _parse_dtype(dtype), True)
-            for col, dtype, _fn in readout])
 
     def merge_fn(key, pdf):
         if dropped:
             pdf = pdf.sort_values(dropped, kind="stable")
         # e.g. per-group Bloom params: each fine group has its own
         # (m, k), so states across the dropped key cannot merge
-        sk = _fold_blobs(pdf, context=(
+        return _group_row(keys, key, pdf, readout=readout, context=(
             f"cannot roll up group {key}: states across the dropped "
             f"key(s) {dropped} have incompatible params; rollup "
             "requires params uniform over the dropped keys "
             "(HLL/CMS/theta/KLL/t-digest with fixed params qualify; "
             "per-group-calibrated Bloom does not)"))
-        extra = {}
-        if readout is not None:
-            name = key[len(keys) - 1]
-            for col, _dtype, fn in readout:
-                extra[col] = [fn(name, sk)]
-        return pd.DataFrame({
-            **{c: [key[i]] for i, c in enumerate(keys)},
-            "sketch": [sk.to_bytes()],
-            "n_rows": [int(pdf["n_rows"].sum())],
-            "n_partials": [int(pdf["n_partials"].sum())],
-            **extra,
-        })
 
-    return sketches.groupBy(*keys).applyInPandas(merge_fn, out_schema)
+    return sketches.groupBy(*keys).applyInPandas(
+        merge_fn, _sketch_table_schema(sketches, to_cols, readout))
 
 
 def build_sketches(df: DataFrame, group_cols: list[str],
@@ -578,14 +534,10 @@ def build_sketches_local(df: DataFrame, group_cols: list[str],
     for r in parts:
         key = tuple(r[c] for c in group_cols) + (r["sketch_name"],)
         groups[key].append((r["partition_id"], r["chunk"], r["partial"]))
-    out = {}
-    for key, lst in groups.items():
-        lst.sort(key=lambda t: (t[0], t[1]))
-        sk = sketch_from_bytes(bytes(lst[0][2]))
-        for _pid, _chunk, blob in lst[1:]:
-            sk.merge(sketch_from_bytes(bytes(blob)))
-        out[key if len(key) > 2 else (key[0], key[1])] = sk
-    return out
+    # (partition_id, chunk) is unique within a group, so the tuple sort
+    # is the merge tree's fold order
+    return {key: merge_blobs(blob for _pid, _chunk, blob in sorted(lst))
+            for key, lst in groups.items()}
 
 
 def _auto_fanout(parts: int) -> list[int] | None:
@@ -634,18 +586,6 @@ def incremental_update(sketch_table: DataFrame, new_df: DataFrame,
     both = (sketch_table.select(*keys, "sketch", "n_rows", "n_partials")
             .unionByName(delta.select(*keys, "sketch", "n_rows",
                                       "n_partials")))
-    out_schema = StructType(_group_fields(sketch_table, group_cols) + [
-        StructField("sketch_name", StringType(), False),
-        StructField("sketch", BinaryType(), False),
-        StructField("n_rows", LongType(), False),
-        StructField("n_partials", LongType(), False),
-    ])
-    if readout is not None:
-        # same fused-extraction contract as merge_partials(readout=):
-        # estimate columns come out of the update's own merge task
-        out_schema = StructType(out_schema.fields + [
-            StructField(col, _parse_dtype(dtype), True)
-            for col, dtype, _fn in readout])
 
     def merge_fn(key, pdf):
         # deterministic merge order for the lossy kernels: base first
@@ -656,21 +596,12 @@ def incremental_update(sketch_table: DataFrame, new_df: DataFrame,
         # order independent of arrival order.
         pdf = pdf.assign(_blob=pdf["sketch"].map(bytes)).sort_values(
             ["n_rows", "_blob"], ascending=[False, True], kind="stable")
-        sk = _fold_blobs(pdf, context=(
+        # same fused-extraction contract as merge_partials(readout=):
+        # estimate columns come out of the update's own merge task
+        return _group_row(keys, key, pdf, readout=readout, context=(
             f"cannot update group {key}: the stored state and the "
             "delta build have incompatible params — pass the same "
             "specs that built the sketch table"))
-        extra = {}
-        if readout is not None:
-            name = key[len(keys) - 1]
-            for col, _dtype, fn in readout:
-                extra[col] = [fn(name, sk)]
-        return pd.DataFrame({
-            **{c: [key[i]] for i, c in enumerate(keys)},
-            "sketch": [sk.to_bytes()],
-            "n_rows": [int(pdf["n_rows"].sum())],
-            "n_partials": [int(pdf["n_partials"].sum())],
-            **extra,
-        })
 
-    return both.groupBy(*keys).applyInPandas(merge_fn, out_schema)
+    return both.groupBy(*keys).applyInPandas(
+        merge_fn, _sketch_table_schema(sketch_table, group_cols, readout))

@@ -36,7 +36,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
-from sketchlib.core.serde import sketch_from_bytes
+from sketchlib.core.serde import merge_blobs
 from sketchlib.spark.build import update_from_token_counts
 
 
@@ -198,9 +198,7 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
         ])
 
     def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cms = sketch_from_bytes(bytes(pdf["cms"].iloc[0]))
-        for blob in pdf["cms"].iloc[1:]:
-            cms.merge(sketch_from_bytes(bytes(blob)))
+        cms = merge_blobs(pdf["cms"])  # CMS merge is order-free
         toks, ests = topk_from_cms(
             cms, {t for lst in pdf["cands"] for t in lst}, k)
         if not toks:

@@ -37,6 +37,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
@@ -143,28 +144,25 @@ def bloom_prune(fact: DataFrame, fact_key: str, bf: BloomFilter) -> DataFrame:
     pass through at the filter's designed rate. Null keys are dropped —
     a null never equi-joins. One broadcast + one Arrow-batched pass.
 
-    Implemented as a vectorized boolean pandas UDF over the KEY COLUMN
+    Implemented as a vectorized boolean Arrow UDF over the KEY COLUMN
     ONLY (iterator form: the filter deserializes once per task): the
     round-5 version was a mapInPandas over the whole row, which shipped
     every payload column JVM->Python->JVM just to drop rows — ~3x the
     bytes across the Arrow boundary for a probe that needs 8 bytes per
-    row (guide §4.1: pass only the columns the function needs). Key
-    canonicalization is unchanged: ints hash as their decimal-string
-    bytes (hashing.to_large_binary == Spark's CAST AS STRING), so the
-    same rows survive.
+    row (guide §4.1: pass only the columns the function needs). Keys
+    stay Arrow arrays, so a nullable int batch holding nulls keeps its
+    int64 type (pandas would promote it to float64) and nulls answer
+    False. Key canonicalization is unchanged: ints hash as their
+    decimal-string bytes (hashing.to_large_binary == Spark's CAST AS
+    STRING), so the same rows survive.
     """
-    import pyspark.sql.functions as F
     blob = fact.sparkSession.sparkContext.broadcast(bf.to_bytes())
 
-    @F.pandas_udf("boolean")
-    def might_contain(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf("boolean")
+    def might_contain(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         f = BloomFilter.from_bytes(blob.value)
-        for s in it:
-            notna = s.notna().to_numpy()
-            mask = notna.copy()
-            if notna.any():
-                mask[notna] = f.contains_batch(s.to_numpy()[notna])
-            yield pd.Series(mask)
+        for keys in it:
+            yield pa.array(f.contains_batch(keys), type=pa.bool_())
 
     # ints and strings hash to the same bytes raw as via CAST AS STRING
     # (to_large_binary canonicalizes ints to decimal strings); every

@@ -119,7 +119,7 @@ def get_spark(app_name: str = "sketchlib", cpus: int | str = "*",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SKETCHLIB_DRIVER_MEM", "8g"))
-        # reliable checkpoints (textops._materialize when a checkpoint
+        # reliable checkpoints (dfutil.materialize when a checkpoint
         # dir is set) are NEVER deleted by default — without this, every
         # dedup_clusters round leaks files to the checkpoint dir forever
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")

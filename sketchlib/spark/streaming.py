@@ -314,8 +314,9 @@ class SketchTableSink:
 
     Exactly-once across restarts: each fold writes a new versioned
     table ``<path>/v=<batch_id>`` and then commits it by writing a
-    ``_COMMIT`` marker INSIDE that version dir (through Spark text IO
-    so hdfs:// s3a:// work like file://; the leading underscore keeps
+    ``_COMMIT`` marker INSIDE that version dir (written and read
+    through the Hadoop FileSystem API, write-temp then rename, so
+    hdfs:// s3a:// work like file://; the leading underscore keeps
     parquet readers from seeing it as data). Nothing is ever
     overwritten, so there is no delete-then-write window: the current
     state is simply the highest-numbered version whose marker reads
@@ -377,22 +378,17 @@ class SketchTableSink:
         part files and the r6 single FILE."""
         jvm, fs = self._fs()
         p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/v={v}/_COMMIT")
-        iou = jvm.org.apache.commons.io.IOUtils
+        if not fs.exists(p):
+            return None  # never committed
 
         def read_one(path) -> str:
             stream = fs.open(path)
             try:
-                return iou.toString(stream, "UTF-8")
+                return bytes(stream.readAllBytes()).decode("utf-8")
             finally:
                 stream.close()
 
-        try:
-            st = fs.getFileStatus(p)
-        except Exception as e:
-            if "FileNotFoundException" in str(e):
-                return None  # never committed
-            raise
-        if st.isDirectory():
+        if fs.getFileStatus(p).isDirectory():
             parts = [s.getPath() for s in fs.listStatus(p)
                      if s.getPath().getName().startswith("part-")]
             return "".join(read_one(pp) for pp in sorted(

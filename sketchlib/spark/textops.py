@@ -25,16 +25,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, LongType, StringType,
                                StructField, StructType)
 
 from sketchlib.core import hashing
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Shared eager-checkpoint util (see dfutil.materialize): reliable
-    checkpoint when a dir is configured, else localCheckpoint —
-    never .cache(), which lingers in the session cache manager.
-    Callers that cannot afford materialization-at-construction pass
-    their own pre-built ``signatures`` table instead."""
-    from sketchlib.spark.dfutil import materialize
-    return materialize(df)
+from sketchlib.spark.dfutil import ensure_min_parallelism, materialize
 
 
 # ---------------------------------------------------------------------------
@@ -77,7 +68,7 @@ def dedup_clusters(pairs: DataFrame, a_col: str = "a_id",
     looping forever. Only nodes that appear in ``pairs`` are emitted
     (singletons are trivially their own cluster and never shuffle).
 
-    Every round's labels are eagerly checkpointed (``_materialize``:
+    Every round's labels are eagerly checkpointed (``dfutil.materialize``:
     reliable checkpoint when the session has a checkpoint dir, local
     otherwise): the pointer jump is a SELF-join (labels referenced
     twice), so without lineage truncation the logical plan would
@@ -85,27 +76,27 @@ def dedup_clusters(pairs: DataFrame, a_col: str = "a_id",
     rounds; local-checkpoint blocks from prior rounds are released by
     the ContextCleaner when their DataFrames go out of scope.
     """
-    edges = _materialize(
+    edges = materialize(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(pairs.select(F.col(b_col).alias("src"),
                             F.col(a_col).alias("dst")))
         .distinct())
-    labels = _materialize(edges.select(F.col("src").alias("node")).distinct()
-                          .withColumn("label", F.col("node")))
+    labels = materialize(edges.select(F.col("src").alias("node")).distinct()
+                         .withColumn("label", F.col("node")))
     for _ in range(max_iter):
         nbr_min = (edges.join(labels, edges["src"] == labels["node"])
                    .groupBy(F.col("dst").alias("node"))
                    .agg(F.min("label").alias("nbr_label")))
         # (1) neighbor-min — materialized: the shortcut self-join below
         # reads it twice and must not double the lineage
-        tent = _materialize(
+        tent = materialize(
             labels.join(nbr_min, "node", "left")
             .select("node",
                     F.least("label", F.coalesce("nbr_label", "label"))
                     .alias("label")))
         # (2) pointer jump: label(v) <- min(label(v), label(label(v)))
         t, p = tent.alias("t"), tent.alias("p")
-        new_labels = _materialize(
+        new_labels = materialize(
             t.join(p, F.col("t.label") == F.col("p.node"), "left")
             .select(F.col("t.node").alias("node"),
                     F.least(F.col("t.label"),
@@ -161,7 +152,12 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     ``id_col`` must be unique per row (it is the dedup subject's
     key): per-doc shingle sets are deduplicated doc-locally, so two
     input rows sharing an id would keep separate (double-counted)
-    sets rather than merging.
+    sets rather than merging. Any orderable id type works; integral
+    ids in [0, 2^31) take a faster packed pair aggregate.
+
+    Not lazy: building the returned DataFrame runs Spark jobs at once
+    (an eager checkpoint of the per-doc shingle hashes and, for
+    integral ids, a min/max probe of the ids).
     """
     toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
     # Per-doc distinct shingles computed DOC-LOCALLY (array_distinct on
@@ -179,8 +175,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # negligible-noise posture as the minhash kernel's shingle
     # identities. Docs with fewer than n tokens are filtered BEFORE the
     # sequence/slice expressions (sequence(0, negative) descends).
-    from sketchlib.spark.dfutil import ensure_min_parallelism
-    base = _materialize(
+    base = materialize(
         ensure_min_parallelism(df.select(F.col(id_col).alias("doc"),
                                          F.col(text_col)))
         .select("doc", toks.alias("t"))
@@ -228,13 +223,15 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # rows at sf1.0 — partial aggregation buys ~nothing). Packing the
     # pair into ONE long (a_id << 32 | b_id) measurably cuts the
     # aggregate's hash+shuffle cost (~1.6x: one 8-byte key vs two);
-    # only taken when ids provably fit 31 bits unsigned — the bounds
-    # probe is one tiny aggregate over the materialized base, and the
-    # general-id fallback keeps the operator total.
-    bounds = base.agg(F.min("doc").alias("lo"), F.max("doc").alias("hi")) \
-        .first()
-    packable = (bounds["lo"] is not None and bounds["lo"] >= 0
-                and bounds["hi"] < (1 << 31))
+    # only taken when ids are integral and provably fit 31 bits
+    # unsigned — the bounds probe is one tiny aggregate over the
+    # materialized base, and the general-id fallback (string ids, any
+    # out-of-range id) keeps the operator total.
+    packable = dict(df.dtypes)[id_col] in ("tinyint", "smallint", "int",
+                                           "bigint")
+    if packable:
+        lo, hi = base.agg(F.min("doc"), F.max("doc")).first()
+        packable = lo is not None and lo >= 0 and hi < (1 << 31)
     if packable:
         # Pair counting over ONE packed long (a_id<<32 | b_id), with
         # the two set sizes riding as a second packed long so no sizes
@@ -361,7 +358,6 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        n_hashes: int = 128, shingle_n: int = 3,
                        seed: int = 7) -> DataFrame:
     """(id, sig: array<bigint>) — one minhash signature per doc."""
-    from sketchlib.spark.dfutil import ensure_min_parallelism
     schema = StructType([
         StructField("doc_id_mh", LongType(), False),
         StructField("sig", ArrayType(LongType()), False),
@@ -402,7 +398,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     components (unbiased estimator of true Jaccard).
 
     The signature plan feeds three join sides; by default it is
-    materialized ONCE via an eager checkpoint (``_materialize``:
+    materialized ONCE via an eager checkpoint (``dfutil.materialize``:
     reliable when a checkpoint dir is set — survives executor loss on
     a real cluster — else local; signatures are 8*n_hashes bytes/doc).
     Unlike ``.cache()``, local-checkpoint blocks belong to the
@@ -417,7 +413,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
         raise ValueError("bands must divide n_hashes")
     rows_per_band = n_hashes // bands
     if signatures is None:
-        signatures = _materialize(minhash_signatures(
+        signatures = materialize(minhash_signatures(
             df, id_col, text_col, n_hashes, shingle_n, seed))
     sigs = signatures.withColumnRenamed("doc_id_mh", "doc")
 
@@ -497,7 +493,6 @@ def _simhash_batch(texts: pd.Series, seed: int) -> tuple[np.ndarray, np.ndarray]
 
 def simhash(df: DataFrame, id_col: str, text_col: str, seed: int = 11) -> DataFrame:
     """(id, simhash: bigint) — order-independent 64-bit near-dup signature."""
-    from sketchlib.spark.dfutil import ensure_min_parallelism
     schema = StructType([
         StructField("doc", LongType(), False),
         StructField("simhash", LongType(), False),
@@ -529,13 +524,13 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     Banding on 4 x 16-bit chunks: two signatures within hamming 3 must
     agree exactly on at least one chunk (pigeonhole), so candidates come
     from 4 equi-joins, never a cross join. Signatures are materialized
-    once at call time via an eager checkpoint (``_materialize``;
+    once at call time via an eager checkpoint (``dfutil.materialize``;
     8 bytes/doc; local-checkpoint blocks are released by the
     ContextCleaner with the result, nothing left in the session's
     cache manager); pass a materialized ``signatures`` table at
     pipeline scale.
     """
-    sh = signatures if signatures is not None else _materialize(
+    sh = signatures if signatures is not None else materialize(
         simhash(df, id_col, text_col, seed))
     if max_hamming <= 3:
         # Multi-index over 8x8-bit chunks: hamming <= h damages at most
@@ -890,7 +885,6 @@ def decontaminate(docs: DataFrame, id_col: str, text_col: str,
                             F.array_distinct(_shingle_expr(F.col("_t"), n)),
                             lambda s: F.xxhash64(s))).alias("sh")))
 
-    from sketchlib.spark.dfutil import ensure_min_parallelism
     # the doc-side tokenize+shingle+hash chain is the scan-bound bulk
     # of the query; spread it when the local scan has few splits
     # (no-op at cluster split counts)
@@ -1142,7 +1136,7 @@ def dup_span_flags(df: DataFrame, id_col: str, text_col: str,
     # (without the eager materialization each consumer branch would
     # recompute tokenization + hashing). At 10^12 docs this is the
     # step to write to a fingerprint TABLE instead.
-    spans = _materialize(spans_src)
+    spans = materialize(spans_src)
     counts = spans.groupBy("_h").agg(F.count("*").alias("_c"))
     dup = counts.filter(F.col("_c") >= int(min_count))
     per_doc = (spans.groupBy("_id")

@@ -51,6 +51,28 @@ def test_null_keys_never_pass(spark):
     assert "b" in tags and "a" not in tags
 
 
+def test_nullable_int_key_nulls_and_values_in_one_batch(spark):
+    """A nullable bigint key with nulls and values in ONE Arrow batch
+    (every 10th key null, as in a scanned table): nulls drop, every
+    match survives, and ints above 2^53 stay exact (a float64 round
+    trip would turn 2^53 + 1 into 2^53 and lose it)."""
+    big = (1 << 53) + 1
+    dim = spark.createDataFrame(
+        [(i,) for i in range(0, 100, 3)] + [(big,)], "d_key long")
+    fact = spark.range(100).coalesce(1).select(
+        F.when(F.col("id") % 10 == 0, F.lit(None))
+        .otherwise(F.col("id")).alias("f_key"),
+        F.col("id").alias("tag"))
+    fact = fact.unionByName(spark.createDataFrame(
+        [(big, 1000), (None, 1001)], "f_key long, tag long")).coalesce(1)
+    bf = build_key_bloom(dim, "d_key", p=0.001)
+    kept = {r["tag"] for r in bloom_prune(fact, "f_key", bf).collect()}
+    nulls = {i for i in range(0, 100, 10)} | {1001}
+    assert {i for i in range(100) if i % 10 and i % 3 == 0} | {1000} \
+        <= kept
+    assert not kept & nulls
+
+
 def test_prune_plan_has_no_exchange(spark, fact_dim):
     """The prune is a map-side vectorized-UDF filter straight over the
     source — no shuffle anywhere in its plan, and ONLY the key column

@@ -68,6 +68,21 @@ def test_ngram_packed_agg_matches_unpacked_fallback(spark):
     assert a, "fixture produced no pairs — test is vacuous"
 
 
+def test_ngram_string_ids_match_bigint_ids(spark):
+    """String doc ids cannot be packed into one long: they take the
+    two-column aggregate and must give the bigint-id result."""
+    docs = _noisy_corpus(spark, n_docs=60, seed=9)
+    want = {(r["a_id"], r["b_id"], r["jaccard"]) for r in
+            textops.ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
+                                        threshold=0.3).collect()}
+    named = docs.withColumn("doc_id", F.format_string("d%05d", "doc_id"))
+    got = {(int(r["a_id"][1:]), int(r["b_id"][1:]), r["jaccard"]) for r in
+           textops.ngram_jaccard_pairs(named, "doc_id", "text", n=3,
+                                       threshold=0.3).collect()}
+    assert got == want
+    assert want, "fixture produced no pairs — test is vacuous"
+
+
 def test_ngram_length_filter_never_drops_qualifying_pairs(spark):
     """The AllPairs length filter is a necessary condition only:
     results with the filter (default path) must equal a

@@ -593,17 +593,17 @@ def test_repetition_scores_null_text_yields_nulls(spark):
 
 
 def test_materialize_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
-    """With a checkpoint dir configured, _materialize survives executor
+    """With a checkpoint dir configured, materialize survives executor
     loss (reliable checkpoint); without one it stays local."""
-    from sketchlib.spark.textops import _materialize
+    from sketchlib.spark.dfutil import materialize
     df = spark.range(10)
-    local = _materialize(df)
+    local = materialize(df)
     assert local.count() == 10
     sc = spark.sparkContext
     assert not sc._jsc.sc().getCheckpointDir().isDefined()
     sc.setCheckpointDir(str(tmp_path / "ck"))
     try:
-        reliable = _materialize(spark.range(7))
+        reliable = materialize(spark.range(7))
         assert reliable.count() == 7
         import os
         assert any(os.scandir(str(tmp_path / "ck")))  # files written

@@ -102,3 +102,113 @@ def test_sql_multipoint_null_for_non_quantile_sketch(spark, sketch_view):
                   "sketch_cdfs(sketch, array(1.0D)) AS c FROM sketches "
                   "WHERE sketch_name = 'url_hll'").first()
     assert r["q"] is None and r["c"] is None
+
+
+def _contract_sketches():
+    """One small sketch of each kind the SQL functions read."""
+    import numpy as np
+    from sketchlib.core.bloom import BloomFilter
+    from sketchlib.core.cms import CountMinSketch
+    from sketchlib.core.fd import FrequentDirections
+    from sketchlib.core.hll import HyperLogLog
+    from sketchlib.core.kll import KLL
+    from sketchlib.core.sample import BottomKSample, WeightedBottomKSample
+    from sketchlib.core.theta import ThetaSketch
+    keys = ["a", "b", "c"]
+    return {
+        "hll": HyperLogLog(b=4).update_batch(keys),
+        "bloom": BloomFilter(64, 3).update_batch(keys),
+        "cms": CountMinSketch(16, 2).update_batch(keys),
+        "kll": KLL(k=8).update_batch(np.array([1.0, 2.0, 3.0])),
+        "fd": FrequentDirections(l=2).update_batch([[1.0, 0.0], [0.0, 2.0]]),
+        "theta": ThetaSketch(k=16).update_batch(keys),
+        "sample": BottomKSample(k=4).update_batch(keys),
+        "wsample": WeightedBottomKSample(k=4).update_batch(
+            keys, np.array([1.0, 2.0, 3.0])),
+    }
+
+
+# name -> (blob kind, extra arguments as [(SQL type, value or a sketch
+# kind)], result on a NULL blob or NULL/NaN argument, kind of a
+# mismatched blob, result on it: a value, or the exception it raises)
+_CONTRACT = {
+    "sketch_estimate": ("hll", [], None, "fd", 2.0),
+    "bloom_contains": ("bloom", [("string", "a")], False, "hll",
+                       ValueError),
+    "cms_count": ("cms", [("string", "a")], 0, "hll", TypeError),
+    "sketch_quantile": ("kll", [("double", 0.5)], None, "hll", None),
+    "sketch_cdf": ("kll", [("double", 2.0)], None, "hll", None),
+    "sketch_quantiles": ("kll", [("array<double>", [0.5])], None, "hll",
+                         None),
+    "sketch_cdfs": ("kll", [("array<double>", [2.0])], None, "hll", None),
+    "cms_join_size": ("cms", [("binary", "cms")], 0, "hll", ValueError),
+    "fd_spectrum": ("fd", [("int", 1)], None, "hll", ValueError),
+    "sample_values": ("sample", [], None, "hll", None),
+    "sample_weights": ("wsample", [], None, "sample", None),
+    "theta_intersect": ("theta", [("binary", "theta")], None, "hll",
+                        ValueError),
+    "theta_difference": ("theta", [("binary", "theta")], None, "hll",
+                         ValueError),
+    "theta_jaccard": ("theta", [("binary", "theta")], None, "hll",
+                      ValueError),
+    "hll_union": ("hll", [("binary", "hll")], None, "theta", ValueError),
+    "hll_intersect": ("hll", [("binary", "hll")], None, "theta",
+                      ValueError),
+    "hll_inclusion": ("hll", [("binary", "hll")], None, "theta",
+                      ValueError),
+}
+
+
+def _registered_names():
+    """Every registered SQL function name, without a session (the
+    parametrize list is built at collection time)."""
+    return sorted([*_CONTRACT, "sketch_merge"])
+
+
+def _collect_one_batch(spark, udf, schema, rows):
+    """Run ``udf`` over ``rows`` in ONE Arrow batch (nulls and values
+    mixed, as in a scanned table); results in row order."""
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], f"i int, {schema}").coalesce(1)
+    cols = [c for c in df.columns if c != "i"]
+    got = {r["i"]: r["v"] for r in
+           df.select("i", udf(*cols).alias("v")).collect()}
+    return [got[i] for i in range(len(rows))]
+
+
+@pytest.mark.parametrize("name", _registered_names())
+def test_null_and_mismatched_kind_contract(spark, name):
+    """Each SQL function's answer to a NULL blob, a NULL/NaN argument
+    and a blob of the wrong kind. ``bloom_contains`` answers False and
+    ``cms_count``/``cms_join_size`` answer 0 on NULL input, never NULL;
+    the others answer NULL."""
+    udfs = register_sql_functions(spark)
+    assert sorted(udfs) == _registered_names()
+    sk = _contract_sketches()
+    blob = {k: s.to_bytes() for k, s in sk.items()}
+    udf = udfs[name]
+    if name == "sketch_merge":
+        schema = "lst array<binary>"
+        # an array holding only NULL, then a NULL array
+        assert _collect_one_batch(spark, udf, schema,
+                                  [([None],), (None,)]) == [None, None]
+        with pytest.raises(Exception, match="AttributeError"):
+            _collect_one_batch(spark, udf, schema,
+                               [([blob["hll"], blob["kll"]],)])
+        return
+    kind, args, null, bad_kind, bad = _CONTRACT[name]
+    schema = ", ".join(["b binary"] + [f"a{j} {t}"
+                                       for j, (t, _v) in enumerate(args)])
+    vals = [blob[v] if t == "binary" else v for t, v in args]
+    rows = [(None, *vals)]
+    if args:
+        # the blob is valid here; only the argument is NULL (NaN for the
+        # numeric ones once nulls share a batch with values)
+        rows.append((blob[kind], *[None] * len(args)))
+    assert _collect_one_batch(spark, udf, schema, rows) == [null] * len(rows)
+    if isinstance(bad, type):
+        with pytest.raises(Exception, match=bad.__name__):
+            _collect_one_batch(spark, udf, schema, [(blob[bad_kind], *vals)])
+    else:
+        assert _collect_one_batch(spark, udf, schema,
+                                  [(blob[bad_kind], *vals)]) == [bad]

@@ -145,7 +145,7 @@ class TestReviewRegressions:
         c = _mk(["x"], [2.0], k=4)
         assert WeightedBottomKSample(4).merge(c).sample() == [b"x"]
         assert c.merge(WeightedBottomKSample(4)).sample() == [b"x"]
-        # serde of the empty state round-trips (the _fold_sorted path)
+        # serde of the empty state round-trips (the merge_blobs path)
         blob = WeightedBottomKSample(4).to_bytes()
         assert WeightedBottomKSample.from_bytes(blob).to_bytes() == blob
 
