@@ -13,28 +13,31 @@ Layout:
     sketchlib.io     — deterministic synthetic `pages` fixture generator
 """
 
-from sketchlib.core.bloom import BloomFilter
-from sketchlib.core.hll import HyperLogLog
-from sketchlib.core.cms import CountMinSketch
-from sketchlib.core.countsketch import CountSketch
-from sketchlib.core.tdigest import TDigest
-from sketchlib.core.kll import KLL
-from sketchlib.core.theta import ThetaSketch
-from sketchlib.core.sample import BottomKSample
-from sketchlib.core.fd import FrequentDirections
-from sketchlib.core.serde import sketch_from_bytes
+import importlib
 
 __version__ = "0.2.0"
 
-__all__ = [
-    "BloomFilter",
-    "HyperLogLog",
-    "CountMinSketch",
-    "CountSketch",
-    "TDigest",
-    "KLL",
-    "ThetaSketch",
-    "BottomKSample",
-    "FrequentDirections",
-    "sketch_from_bytes",
-]
+# Each public name is imported from its module on first access (PEP 562),
+# so importing the package alone loads no numpy or pyarrow: Spark's Python
+# worker daemon (``sketchlib.spark.worker_daemon``) imports the package as
+# it starts, and the session's first tasks wait for that start.
+_EXPORTS = {
+    "BloomFilter": "sketchlib.core.bloom",
+    "HyperLogLog": "sketchlib.core.hll",
+    "CountMinSketch": "sketchlib.core.cms",
+    "CountSketch": "sketchlib.core.countsketch",
+    "TDigest": "sketchlib.core.tdigest",
+    "KLL": "sketchlib.core.kll",
+    "ThetaSketch": "sketchlib.core.theta",
+    "BottomKSample": "sketchlib.core.sample",
+    "FrequentDirections": "sketchlib.core.fd",
+    "sketch_from_bytes": "sketchlib.core.serde",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module 'sketchlib' has no attribute {name!r}")
+    return getattr(importlib.import_module(_EXPORTS[name]), name)

@@ -12,15 +12,19 @@ OR-merge :139-164) with the Spark-native architecture from SURVEY.md §4:
                           `groupByKey` at main.py:146 shuffles every row —
                           its known skew trap, SURVEY.md G1). Only
                           fixed-size sketch states cross the wire.
-  3. ``merge_partials`` — hierarchical merge via ``applyInPandas``;
-                          optional two-level (salted) fan-in for very
+  3. ``merge_partials`` — merge of the partials per (group, spec);
+                          optional multi-level (salted) fan-in for very
                           wide clusters, treeAggregate-style.
 
-One fold serves every merge here: each merge-tree level, the narrow
-single-partition fold, ``rollup_sketches``, ``incremental_update`` and
-the collect-and-fold ``build_sketches_local`` sort a group's rows into
-their own fixed order and hand the blobs to ``serde.merge_blobs``.
-Every sketch-table row is built by ``_group_row`` under the one
+One fold serves every merge here: ``fold_groups`` repartitions by the
+group keys, sorts each partition by the keys and then the caller's own
+merge order, and streams consecutive groups through ONE ``mapInArrow``
+task per partition into ``serde.merge_blobs``. Each merge-tree level,
+the narrow single-partition fold (the same fold without the
+repartition), ``rollup_sketches``, ``incremental_update`` and the heavy
+hitters merge use it; the collect-and-fold ``build_sketches_local``
+calls ``merge_blobs`` in the same (partition_id, chunk) order. Every
+sketch-table row is built by ``_group_row`` under the one
 ``_sketch_table_schema``.
 
 At 100 TB: the shuffle volume is (#input_partitions × #groups ×
@@ -40,6 +44,7 @@ import pyarrow as pa
 import pyarrow.compute as pa_compute
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType,
                                _parse_datatype_string)
@@ -312,22 +317,101 @@ def _sketch_table_schema(df: DataFrame, group_cols: list[str],
          for col, dtype, _fn in readout or ()])
 
 
-def _group_row(keys: list[str], key: tuple, pdf: pd.DataFrame,
-               blob_col: str = "sketch", readout: list | None = None,
-               context: str | None = None) -> pd.DataFrame:
-    """One sketch-table row from one group's rows, which the caller has
-    already sorted into its merge order: the folded blob, summed n_rows
-    and n_partials (a partial row counts as one), and each ``readout``
-    ``fn(sketch_name, sketch)`` run on the merged sketch."""
-    sk = merge_blobs(pdf[blob_col], context)
-    return pd.DataFrame({
-        **{c: [key[i]] for i, c in enumerate(keys)},
-        "sketch": [sk.to_bytes()],
-        "n_rows": [int(pdf["n_rows"].sum())],
-        "n_partials": [int(pdf["n_partials"].sum()) if "n_partials" in pdf
-                       else len(pdf)],
-        **{col: [fn(key[-1], sk)] for col, _dtype, fn in readout or ()},
-    })
+def _group_row(keys: list[str], group: pa.Table, blob_col: str = "sketch",
+               readout: list | None = None, context=None) -> dict:
+    """One sketch-table row (``fold_groups`` adds the key columns) from
+    one group's rows, which arrive already sorted into the caller's
+    merge order: the folded blob, summed n_rows and n_partials (a
+    partial row counts as one), and each ``readout``
+    ``fn(sketch_name, sketch)`` run on the merged sketch.
+    ``context(key)`` gives the group's merge-error prefix."""
+    key = tuple(group.column(k)[0].as_py() for k in keys)
+    sk = merge_blobs(group.column(blob_col).to_pylist(),
+                     context and context(key))
+    n_partials = (pa_compute.sum(group.column("n_partials")).as_py()
+                  if "n_partials" in group.column_names else group.num_rows)
+    return {"sketch": sk.to_bytes(),
+            "n_rows": pa_compute.sum(group.column("n_rows")).as_py(),
+            "n_partials": n_partials,
+            **{col: fn(key[-1], sk) for col, _dtype, fn in readout or ()}}
+
+
+_NAN = object()  # one stand-in for every NaN key, which != itself
+
+
+def fold_groups(df: DataFrame, keys: list[str], order: list, row_fn,
+                schema: StructType, shuffle: bool = True) -> DataFrame:
+    """The one partition-wise fold behind every sketch merge.
+
+    ``repartition(keys)`` brings each group's rows into one partition
+    and ``sortWithinPartitions(keys, order)`` makes them consecutive, in
+    the caller's merge ``order`` (column names or sort expressions).
+    ONE ``mapInArrow`` task per partition then streams the groups:
+    ``row_fn(group)`` gets one group's rows as a ``pyarrow.Table`` and
+    returns its output rows as dicts of the non-key columns; each row's
+    key columns are copied from the group's first row as Arrow values,
+    never through Python objects, so timestamps, decimals and bigints
+    come out exactly as they went in. Only one group is held at a time,
+    even when it spans Arrow batches, as with a per-group
+    ``applyInPandas``, but the Python boundary is crossed once per
+    partition instead of once per group. ``shuffle=False`` folds each
+    partition as it stands, which is complete only when every group
+    already lives in one partition.
+    """
+    if shuffle:
+        df = df.repartition(*keys)
+    df = df.sortWithinPartitions(*keys, *order)
+    arrow_schema = to_arrow_schema(schema)
+
+    def to_batch(done: list, out_schema: pa.Schema) -> pa.RecordBatch:
+        # done: [(the group's first row, its output rows)]
+        cols = []
+        for f in out_schema:
+            if f.name in keys:
+                cols.append(pa.concat_arrays(
+                    [first.column(f.name) for first, rows in done
+                     for _ in rows]))
+            else:  # from_pandas: a NaN read-out becomes SQL NULL
+                cols.append(pa.array(
+                    [r[f.name] for _, rows in done for r in rows],
+                    type=f.type, from_pandas=True))
+        return pa.RecordBatch.from_arrays(cols, schema=out_schema)
+
+    def sketch_fold(batches: Iterator[pa.RecordBatch]):
+        open_key, parts = None, []  # the open group's key and slices
+        out_schema = None
+
+        def fold(slices):
+            return slices[0].slice(0, 1), row_fn(pa.Table.from_batches(slices))
+
+        for batch in batches:
+            if out_schema is None:
+                # key columns keep the type Spark sent them with (a
+                # timestamp carries the session time zone)
+                out_schema = pa.schema([
+                    batch.schema.field(f.name) if f.name in keys else f
+                    for f in arrow_schema])
+            done, start = [], 0  # start: the open group's first row
+            cols = [batch.column(k).to_pylist() for k in keys]
+            for i, key in enumerate(zip(*cols)):
+                key = tuple(_NAN if v != v else v for v in key)
+                if key == open_key:
+                    continue
+                if i > start:
+                    parts.append(batch.slice(start, i - start))
+                if parts:
+                    done.append(fold(parts))
+                open_key, parts, start = key, [], i
+            if start < batch.num_rows:
+                parts.append(batch.slice(start))
+            if any(rows for _, rows in done):
+                yield to_batch(done, out_schema)
+        if parts:
+            done = [fold(parts)]
+            if done[0][1]:
+                yield to_batch(done, out_schema)
+
+    return df.mapInArrow(sketch_fold, schema)
 
 
 def merge_partials(partials: DataFrame, group_cols: list[str],
@@ -370,79 +454,44 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
         fanout = _auto_fanout(nparts)
     out_schema = _sketch_table_schema(partials, group_cols, readout)
     keys = [*group_cols, "sketch_name"]
-
-    def in_order(pdf):
-        return pdf.sort_values(["partition_id", "chunk"], kind="stable")
-
-    def merge_fn(key, pdf):
-        return _group_row(keys, key, in_order(pdf), "partial", readout)
+    order = ["partition_id", "chunk"]
 
     plan = list(fanout) if isinstance(fanout, (list, tuple)) else \
         ([int(fanout)] if fanout and fanout > 1 else [])
     if not plan and nparts is None:
         nparts = partials.rdd.getNumPartitions()
 
-    if nparts == 1 and not plan and allow_narrow:
-        # every partial row of a (group, spec) lives in the one input
-        # partition, so a NARROW per-partition fold is complete — no
-        # Exchange, no extra stage wave: it pipelines with the partial
-        # build in the same task (measurably faster on small inputs,
-        # where the shuffle stage latency dominates the whole query).
-        # Fold order is the same (partition_id, chunk) sort, so the
-        # result is bitwise-identical to the shuffle path.
-        #
-        # Memory shape: batches accumulate per GROUP and each group is
-        # folded (and its accumulation freed) independently, so the
-        # transient is all partial blobs once plus ONE group's frame —
-        # never a single concat of every group's dense partials. For
-        # inputs where even that is too much (a large checkpoint store
-        # read back as one partition), callers pass allow_narrow=False
-        # and take the shuffle path, which holds one group per task.
-        def fold_partition(batches):
-            groups: dict = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                for key, sub in pdf.groupby(keys, sort=False, dropna=False):
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    # normalize BEFORE the dict insert: distinct NaN
-                    # objects are unequal, so a null numeric group key
-                    # spanning multiple Arrow batches would otherwise
-                    # split into duplicate partial rows (review r5)
-                    groups.setdefault(_norm_nan(key), []).append(sub)
-            if not groups:
-                return
-            out = []
-            for key in list(groups):
-                sub = pd.concat(groups.pop(key), ignore_index=True)
-                out.append(merge_fn(key, sub))
-            yield pd.concat(out, ignore_index=True)
-
-        return partials.mapInPandas(fold_partition, out_schema)
-
+    level = partials
     if plan:
         mid_schema = _partials_schema(partials, group_cols).add(
             "n_partials", LongType(), False)
 
-        def level_fn(key, pdf, bucket):
+        def level_row(group):
             # bucket index becomes next level's partition_id: the fold
             # order at every level is then a pure function of the tree
             # shape, not of task scheduling
-            return (_group_row(keys, key, in_order(pdf), "partial")
-                    .rename(columns={"sketch": "partial"})
-                    .assign(partition_id=int(bucket), chunk=0))
+            row = _group_row(keys, group, "partial")
+            return [{**row, "partial": row["sketch"], "chunk": 0,
+                     "partition_id": group.column("salt")[0].as_py()}]
 
-        level = partials
         for buckets in plan:
             salted = level.withColumn(
                 "salt", F.pmod(F.col("partition_id"), F.lit(int(buckets))))
-            level = (salted.groupBy(*keys, "salt")
-                     .applyInPandas(lambda k, p: level_fn(k[:-1], p, k[-1]),
-                                    mid_schema))
-        return level.groupBy(*keys).applyInPandas(merge_fn, out_schema)
-
-    return partials.groupBy(*keys).applyInPandas(merge_fn, out_schema)
+            level = fold_groups(salted, [*keys, "salt"], order, level_row,
+                                mid_schema)
+    # a single input partition already holds every partial row of a
+    # (group, spec), so the final fold runs NARROW there: no Exchange,
+    # no extra stage wave, pipelined with the partial build in the same
+    # task (measurably faster on small inputs, where shuffle stage
+    # latency dominates). Memory is the same as the shuffled fold: the
+    # sort may spill, and the fold holds one group's rows at a time.
+    # What the narrow fold gives up is parallelism, so callers whose
+    # one partition holds many groups (a large checkpoint store read
+    # back) pass allow_narrow=False to spread them over tasks.
+    return fold_groups(
+        level, keys, order,
+        lambda group: [_group_row(keys, group, "partial", readout)],
+        out_schema, shuffle=not (nparts == 1 and not plan and allow_narrow))
 
 
 def rollup_sketches(sketches: DataFrame, from_cols: list[str],
@@ -474,20 +523,20 @@ def rollup_sketches(sketches: DataFrame, from_cols: list[str],
     dropped = [c for c in from_cols if c not in to_cols]
     keys = [*to_cols, "sketch_name"]
 
-    def merge_fn(key, pdf):
-        if dropped:
-            pdf = pdf.sort_values(dropped, kind="stable")
+    def row(group):
         # e.g. per-group Bloom params: each fine group has its own
         # (m, k), so states across the dropped key cannot merge
-        return _group_row(keys, key, pdf, readout=readout, context=(
+        return [_group_row(keys, group, readout=readout, context=lambda key: (
             f"cannot roll up group {key}: states across the dropped "
             f"key(s) {dropped} have incompatible params; rollup "
             "requires params uniform over the dropped keys "
             "(HLL/CMS/theta/KLL/t-digest with fixed params qualify; "
-            "per-group-calibrated Bloom does not)"))
+            "per-group-calibrated Bloom does not)"))]
 
-    return sketches.groupBy(*keys).applyInPandas(
-        merge_fn, _sketch_table_schema(sketches, to_cols, readout))
+    # fold order: the dropped keys ascending, nulls last
+    return fold_groups(sketches, keys,
+                       [F.col(c).asc_nulls_last() for c in dropped], row,
+                       _sketch_table_schema(sketches, to_cols, readout))
 
 
 def build_sketches(df: DataFrame, group_cols: list[str],
@@ -587,21 +636,19 @@ def incremental_update(sketch_table: DataFrame, new_df: DataFrame,
             .unionByName(delta.select(*keys, "sketch", "n_rows",
                                       "n_partials")))
 
-    def merge_fn(key, pdf):
-        # deterministic merge order for the lossy kernels: base first
-        # (larger n_rows), then delta. Row arrival order inside
-        # applyInPandas is shuffle-dependent, so ties on n_rows (equal
-        # base/delta sizes, repeated updates) need a content-based
-        # secondary key — the blob bytes — to make the fold a total
-        # order independent of arrival order.
-        pdf = pdf.assign(_blob=pdf["sketch"].map(bytes)).sort_values(
-            ["n_rows", "_blob"], ascending=[False, True], kind="stable")
+    def row(group):
         # same fused-extraction contract as merge_partials(readout=):
         # estimate columns come out of the update's own merge task
-        return _group_row(keys, key, pdf, readout=readout, context=(
+        return [_group_row(keys, group, readout=readout, context=lambda key: (
             f"cannot update group {key}: the stored state and the "
             "delta build have incompatible params — pass the same "
-            "specs that built the sketch table"))
+            "specs that built the sketch table"))]
 
-    return both.groupBy(*keys).applyInPandas(
-        merge_fn, _sketch_table_schema(sketch_table, group_cols, readout))
+    # deterministic merge order for the lossy kernels: base first
+    # (larger n_rows), then delta. Ties on n_rows (equal base/delta
+    # sizes, repeated updates) need a content-based secondary key — the
+    # blob bytes — to make the fold a total order independent of
+    # arrival order.
+    return fold_groups(
+        both, keys, [F.desc("n_rows"), F.asc("sketch")], row,
+        _sketch_table_schema(sketch_table, group_cols, readout))

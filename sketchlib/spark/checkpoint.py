@@ -322,9 +322,9 @@ def build_sketches_checkpointed(df: DataFrame, group_cols: list[str],
         new_partials = build_partials(remaining, group_cols, specs)
         ckpt.write(new_partials, fp, append=True)
         # allow_narrow=False: a store read back as ONE partition
-        # would concentrate every group's partials in a single
-        # narrow-fold task; stored partials always merge via the
-        # shuffle path (one group per task)
+        # would fold every group's partials in a single narrow task;
+        # stored partials always merge via the shuffle path, which
+        # spreads the groups over the shuffle partitions
         return merge_partials(ckpt.read_partials(), group_cols,
                               fanout=fanout, allow_narrow=False,
                               readout=readout)

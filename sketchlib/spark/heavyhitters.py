@@ -29,7 +29,6 @@ from __future__ import annotations
 import heapq
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
@@ -37,7 +36,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
 
 from sketchlib.core.cms import CountMinSketch
 from sketchlib.core.serde import merge_blobs
-from sketchlib.spark.build import update_from_token_counts
+from sketchlib.spark.build import fold_groups, update_from_token_counts
 
 
 class SpaceSaving:
@@ -197,17 +196,12 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
             StructField("rnk", IntegerType(), False),
         ])
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cms = merge_blobs(pdf["cms"])  # CMS merge is order-free
+    def merge(group) -> list:
+        cms = merge_blobs(group.column("cms").to_pylist())  # order-free
         toks, ests = topk_from_cms(
-            cms, {t for lst in pdf["cands"] for t in lst}, k)
-        if not toks:
-            return pd.DataFrame(columns=[*group_cols, "token", "est_cnt", "rnk"])
-        return pd.DataFrame({
-            **{c: [key[i]] * len(toks) for i, c in enumerate(group_cols)},
-            "token": toks,
-            "est_cnt": ests,
-            "rnk": np.arange(1, len(toks) + 1, dtype=np.int32),
-        })
+            cms, {t for lst in group.column("cands").to_pylist()
+                  for t in lst}, k)
+        return [{"token": t, "est_cnt": e, "rnk": i}
+                for i, (t, e) in enumerate(zip(toks, ests), 1)]
 
-    return partials.groupBy(*group_cols).applyInPandas(merge, out_schema)
+    return fold_groups(partials, group_cols, [], merge, out_schema)

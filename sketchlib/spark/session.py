@@ -77,16 +77,20 @@ def package_zip(out_dir: str | None = None) -> str:
     return out
 
 
-def attach_package(spark: SparkSession) -> None:
-    """Make sketchlib importable inside Spark Python workers."""
+def _workers_import_repo(master: str) -> bool:
+    """Whether forked Python workers import sketchlib from this source
+    tree without a shipped zip."""
     # PYTHONPATH only reaches forked LOCAL workers, and only an exact
     # path entry counts (a substring test false-positives on sibling
     # dirs like /root/repo-old); on a real cluster always ship the zip
-    is_local = spark.sparkContext.master.startswith("local")
     entries = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-    if is_local and _REPO_ROOT in entries:
-        return  # already visible to forked workers
-    spark.sparkContext.addPyFile(package_zip())
+    return master.startswith("local") and _REPO_ROOT in entries
+
+
+def attach_package(spark: SparkSession) -> None:
+    """Make sketchlib importable inside Spark Python workers."""
+    if not _workers_import_repo(spark.sparkContext.master):
+        spark.sparkContext.addPyFile(package_zip())
 
 
 def get_spark(app_name: str = "sketchlib", cpus: int | str = "*",
@@ -98,11 +102,22 @@ def get_spark(app_name: str = "sketchlib", cpus: int | str = "*",
     - Arrow batch size bounds pandas-UDF memory per task.
     - shuffle.partitions sized to parallelism (partial-sketch shuffles
       are tiny; raw-row shuffles never happen in the build path).
+    - Python workers fork from ``sketchlib.spark.worker_daemon``
+      (``spark.python.daemon.module``) instead of ``pyspark.daemon``.
+      pyspark re-reads every cached zip archive's directory before
+      each task; that daemon skips the re-read while an archive is
+      unchanged, which cut the median run time of a no-op
+      ``mapInPandas`` task from 195-296 ms to 71-77 ms on 4 cores
+      (``BENCH/task_overhead.py``). It is set only when the daemon
+      process itself can import sketchlib, i.e. this source tree is on
+      ``PYTHONPATH`` (the check ``attach_package`` makes); otherwise
+      Spark's default daemon runs.
     """
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cpus == "*" else max(8, int(cpus))
+    master = f"local[{cpus}]"
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -126,6 +141,9 @@ def get_spark(app_name: str = "sketchlib", cpus: int | str = "*",
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
     )
+    if _workers_import_repo(master):
+        builder = builder.config("spark.python.daemon.module",
+                                 "sketchlib.spark.worker_daemon")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     attach_package(spark)

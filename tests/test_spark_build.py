@@ -144,15 +144,16 @@ def test_auto_fanout_multi_level_on_wide_input(spark, pages_tiny):
     df = build_sketches(wide, ["lang"],
                         [SketchSpec("h", "hll", "url", {"b": 8})])
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # auto plan at 100 partials: [7, 2] salt levels + final fold
-    assert plan.count("FlatMapGroupsInPandas") == 3, plan
+    # auto plan at 100 partials: [7, 2] salt levels + final fold, each
+    # one pass of the partition-wise merge fold
+    assert plan.count("MapInArrow sketch_fold(") == 3, plan
     narrow = build_sketches(pages_tiny, ["lang"],
                             [SketchSpec("h", "hll", "url", {"b": 8})])
     plan_n = narrow._jdf.queryExecution().executedPlan().toString()
     # single-partition input: the merge is a NARROW per-partition fold
-    # pipelined with the build — no groupBy stage, no Exchange at all
-    assert plan_n.count("FlatMapGroupsInPandas") == 0, plan_n
-    assert "fold_partition" in plan_n and "Exchange" not in plan_n, plan_n
+    # pipelined with the build — one merge level, no Exchange at all
+    assert plan_n.count("MapInArrow sketch_fold(") == 1, plan_n
+    assert "Exchange" not in plan_n, plan_n
     # results identical either way (lattice merge)
     a = {(r["lang"]): bytes(r["sketch"]) for r in df.collect()}
     b = {(r["lang"]): bytes(r["sketch"]) for r in narrow.collect()}
@@ -266,7 +267,7 @@ def test_narrow_fold_null_numeric_group_key_across_batches(spark):
     # interleave the null and non-null groups and force a 1-group
     # in-flight budget so the build FLUSHES many chunked partial rows
     # per group; tiny Arrow batches then split one group's partial
-    # rows across fold_partition batches — the regression scenario
+    # rows across the narrow fold's batches — the regression scenario
     rows = []
     for i in range(40):
         rows.append((None, f"u{i}"))
