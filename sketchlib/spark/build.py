@@ -6,7 +6,7 @@ OR-merge :139-164) with the Spark-native architecture from SURVEY.md §4:
 
   1. ``calibrate``      — exact `groupBy().count()` (Catalyst partial
                           aggregation; the only full-row shuffle-free scan).
-  2. ``build_partials`` — ``mapInPandas`` over *input partitions*: one
+  2. ``build_partials`` — ``mapInArrow`` over *input partitions*: one
                           partial sketch per (group, spec) per partition.
                           Raw rows NEVER shuffle (the reference's
                           `groupByKey` at main.py:146 shuffles every row —
@@ -15,6 +15,13 @@ OR-merge :139-164) with the Spark-native architecture from SURVEY.md §4:
   3. ``merge_partials`` — merge of the partials per (group, spec);
                           optional multi-level (salted) fan-in for very
                           wide clusters, treeAggregate-style.
+
+One loop serves every partial build: ``build_groups`` groups each
+Arrow batch with ``arrow_groups`` (exact keys: a bigint never passes
+through float64), keeps one state per group and flushes them as
+partial rows. ``build_partials``, the heavy hitters partial build and
+the join-key Bloom use it; ``bloom_validate``'s probe groups with
+``arrow_groups`` too.
 
 One fold serves every merge here: ``fold_groups`` repartitions by the
 group keys, sorts each partition by the keys and then the caller's own
@@ -35,6 +42,7 @@ reference's design scale, preserved verbatim.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from datetime import datetime
 
 import os
 
@@ -105,17 +113,6 @@ def _partials_schema(df: DataFrame, group_cols: list[str]) -> StructType:
         StructField("partition_id", IntegerType(), False),
         StructField("chunk", IntegerType(), False),
     ])
-
-
-def _norm_nan(key):
-    """pandas groupby(dropna=False) yields float NaN for null keys while
-    Spark's collect() yields None — normalize to None so per-group param
-    dicts and validation self-exclusion line up across the boundary."""
-    if isinstance(key, tuple):
-        return tuple(_norm_nan(k) for k in key)
-    if isinstance(key, float) and np.isnan(key):
-        return None
-    return key
 
 
 def tokens_arrow(col: pd.Series) -> "pa.Array":
@@ -221,21 +218,154 @@ def _feed(spec: SketchSpec, sketch, sub: pd.DataFrame,
         sketch.update_batch(vals)
 
 
+_NAN = float("nan")  # the one Python key of every NaN group
+
+
+def _py_key(v):
+    """One group key value as Python, as ``collect()`` returns it, but
+    every NaN is the one ``_NAN`` (so equal keys compare and hash
+    equal) and a zoned timestamp is its naive wall time, as pandas
+    UDFs saw it."""
+    if v != v:
+        return _NAN
+    if isinstance(v, datetime) and v.tzinfo is not None:
+        return v.replace(tzinfo=None)
+    return v
+
+
+def arrow_groups(batch: pa.RecordBatch, keys: list[str]) -> list:
+    """``[(key, rows)]``, one entry per group of ``batch`` by its
+    ``keys`` columns, in order of first appearance: ``rows`` holds the
+    group's row positions in batch order, ``key`` the tuple of its
+    ``_py_key`` values. Groups are found on the Arrow values, so
+    bigints and decimals stay exact; as in Spark's ``groupBy``, null
+    is one group, every NaN is one group and -0.0 groups with 0.0. The
+    one definition of "same group" for the partial builds, the Bloom
+    validation probe and the merge fold."""
+    if not batch.num_rows:
+        return []
+    ids = np.zeros(batch.num_rows, np.int64)
+    for k in keys:
+        col = batch.column(k)
+        if pa.types.is_floating(col.type):  # one bit pattern per group
+            col = pa_compute.if_else(pa_compute.is_nan(col), np.nan,
+                                     pa_compute.add(col, 0.0))
+        codes = pa_compute.dictionary_encode(
+            col, null_encoding="encode").indices.to_numpy()
+        ids = np.unique(ids * (int(codes.max()) + 1) + codes,
+                        return_inverse=True)[1]
+    order = np.argsort(ids, kind="stable")
+    groups = sorted(np.split(order, np.flatnonzero(np.diff(ids[order])) + 1),
+                    key=lambda rows: rows[0])
+    firsts = [rows[0] for rows in groups]
+    cols = [batch.column(k).take(firsts).to_pylist() for k in keys]
+    return [(tuple(_py_key(col[i]) for col in cols), rows)
+            for i, rows in enumerate(groups)]
+
+
+def _rows_batch(done: list, schema: pa.Schema) -> pa.RecordBatch:
+    """One output batch of ``schema`` from ``done``: [(a group's key
+    row, its output rows)]. Each output row is a dict of the non-key
+    columns; its key columns, those of the one-row key ``RecordBatch``,
+    are copied from the key row as Arrow values, never through Python
+    objects, so timestamps, decimals and bigints come out exactly as
+    they went in, with the type Spark sent them (a timestamp carries
+    the session time zone)."""
+    key_schema = done[0][0].schema
+    fields, cols = [], []
+    for f in schema:
+        if f.name in key_schema.names:
+            f = f.with_type(key_schema.field(f.name).type)
+            cols.append(pa.concat_arrays(
+                [key.column(f.name) for key, rows in done for _ in rows]))
+        else:  # from_pandas: a NaN read-out becomes SQL NULL
+            cols.append(pa.array(
+                [r[f.name] for _, rows in done for r in rows],
+                type=f.type, from_pandas=True))
+        fields.append(f)
+    return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
+
+
+def build_groups(df: DataFrame, keys: list[str], value_cols: list[str],
+                 start, feed, emit, schema: StructType,
+                 max_groups_in_flight: int | None = None) -> DataFrame:
+    """The one partial-build loop: ONE ``mapInArrow`` task per input
+    partition keeps a state per group of ``keys`` and emits the states
+    as rows of ``schema``. Raw rows never shuffle.
+
+    ``arrow_groups`` splits each Arrow batch into groups;
+    ``start(key)`` makes a group's state when the group first appears,
+    and ``feed(state, rows)`` updates it with the group's rows of
+    ``value_cols`` as a pandas frame (converted once per batch).
+    ``emit(state, chunk)`` returns the group's output rows as dicts of
+    the non-key columns; ``_rows_batch`` copies the key columns from
+    the group's first row as Arrow values.
+
+    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
+    or 8192) bounds task memory on HIGH-CARDINALITY keys: when a task
+    holds that many group states it FLUSHES them and starts fresh with
+    ``chunk`` one higher, so memory is O(max_groups x state_bytes)
+    instead of O(#groups-in-partition x state_bytes). The check runs
+    per group, not per batch, so one wide Arrow batch cannot blow past
+    the bound; groups arrive in first-appearance order, so chunk
+    boundaries are deterministic.
+    """
+    if max_groups_in_flight is None:
+        max_groups_in_flight = int(os.environ.get(
+            "SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
+    if max_groups_in_flight < 1:
+        raise ValueError("max_groups_in_flight must be >= 1")
+    arrow_schema = to_arrow_schema(schema)
+
+    def sketch_partials(batches: Iterator[pa.RecordBatch]):
+        acc: dict = {}  # key -> (the group's key row, its state)
+        chunk = 0
+
+        def flush() -> pa.RecordBatch:
+            return _rows_batch([(key_row, emit(state, chunk))
+                                for key_row, state in acc.values()],
+                               arrow_schema)
+
+        for batch in batches:
+            groups = arrow_groups(batch, keys)
+            if not groups:
+                continue
+            # one take puts each group's rows together, so a group's
+            # frame is a slice
+            pdf = batch.select(value_cols).take(
+                np.concatenate([rows for _, rows in groups])).to_pandas()
+            end = 0
+            for key, rows in groups:
+                slot = acc.get(key)
+                if slot is None:
+                    # take copies the key row, which must not pin the batch
+                    slot = acc[key] = (batch.select(keys).take([rows[0]]),
+                                       start(key))
+                end += len(rows)
+                feed(slot[1], pdf.iloc[end - len(rows):end])
+                if len(acc) >= max_groups_in_flight:
+                    yield flush()
+                    acc.clear()
+                    chunk += 1
+        if acc:
+            yield flush()
+
+    return df.mapInArrow(sketch_partials, schema)
+
+
 def build_partials(df: DataFrame, group_cols: list[str],
                    specs: list[SketchSpec],
                    max_groups_in_flight: int | None = None) -> DataFrame:
-    """Stage 2a: one partial sketch per (input partition, group, spec).
+    """Stage 2a: one partial sketch per (input partition, group, spec),
+    through ``build_groups``.
 
     Column-prunes to exactly the needed columns before the Python
     boundary so the parquet scan reads only those (ReadSchema check).
 
-    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
-    or 8192) bounds task memory on HIGH-CARDINALITY group keys: when a
-    task is holding that many (group, spec) states it FLUSHES them as
-    partial rows (tagged with an increasing ``chunk``) and starts
-    fresh, so memory is O(max_groups x state_bytes) instead of
-    O(#groups-in-partition x state_bytes). Flushed chunks are just
-    more partials: lattice kernels merge back bitwise-identical to the
+    ``max_groups_in_flight`` bounds task memory on high-cardinality
+    group keys (see ``build_groups``); each flush tags its partial rows
+    with an increasing ``chunk``. Flushed chunks are just more
+    partials: lattice kernels merge back bitwise-identical to the
     unflushed build; the lossy quantile kernels get one more merge
     boundary — the same effect the partition split already has — and
     stay deterministic because the merge totally orders partial rows
@@ -246,61 +376,33 @@ def build_partials(df: DataFrame, group_cols: list[str],
     names = [s.name for s in specs]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate spec names: {names}")
-    if max_groups_in_flight is None:
-        max_groups_in_flight = int(os.environ.get(
-            "SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
-    if max_groups_in_flight < 1:
-        raise ValueError("max_groups_in_flight must be >= 1")
-    value_cols = sorted(({s.value_col for s in specs}
-                         | {s.weight_col for s in specs if s.weight_col})
-                        - set(group_cols))  # a group col can be sketched
-    sel = df.select(*group_cols, *value_cols)
-    schema = _partials_schema(df, group_cols)
-    n_groups = len(group_cols)
-    flush_at = max_groups_in_flight * len(specs)
+    value_cols = sorted({s.value_col for s in specs}
+                        | {s.weight_col for s in specs if s.weight_col})
+    # a group col can be sketched
+    sel = df.select(*group_cols, *[c for c in value_cols
+                                   if c not in group_cols])
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def start(key):
+        return [[spec.make(key) for spec in specs], 0]  # sketches, n_rows
+
+    def feed(state, rows: pd.DataFrame):
+        # extract each distinct (value_col, tokenize, numeric) once per
+        # group — specs often share a column (e.g. a Bloom and an HLL
+        # over url)
+        vcache: dict = {}
+        for spec, sketch in zip(specs, state[0]):
+            _feed(spec, sketch, rows, vcache)
+        state[1] += len(rows)
+
+    def emit(state, chunk: int) -> list:
         pid = task_partition_id()
-        acc: dict = {}  # (group_tuple, spec_idx) -> [sketch, n_rows]
-        chunk = 0
+        return [{"sketch_name": spec.name, "partial": sketch.to_bytes(),
+                 "n_rows": state[1], "partition_id": pid, "chunk": chunk}
+                for spec, sketch in zip(specs, state[0])]
 
-        def emit():
-            rows = []
-            for (gkey, si), (sk, n) in acc.items():
-                rows.append((*gkey, specs[si].name, sk.to_bytes(), n, pid,
-                             chunk))
-            return pd.DataFrame(rows, columns=[*group_cols, "sketch_name",
-                                               "partial", "n_rows",
-                                               "partition_id", "chunk"])
-
-        for pdf in batches:
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = _norm_nan(gkey)
-                # extract each distinct (value_col, tokenize, numeric)
-                # once per group — specs often share a column (e.g. a
-                # Bloom and an HLL over url)
-                vcache: dict = {}
-                for si, spec in enumerate(specs):
-                    slot = acc.get((gkey, si))
-                    if slot is None:
-                        slot = [spec.make(gkey if n_groups > 1 else gkey[0]), 0]
-                        acc[(gkey, si)] = slot
-                    _feed(spec, slot[0], sub, vcache)
-                    slot[1] += len(sub)
-                # checked per GROUP, not per batch: one wide arrow
-                # batch must not blow past the memory bound (pandas
-                # groupby iteration order is first-occurrence —
-                # deterministic, so chunk boundaries are too)
-                if len(acc) >= flush_at:
-                    yield emit()
-                    acc.clear()
-                    chunk += 1
-        if acc:
-            yield emit()
-
-    return sel.mapInPandas(fn, schema)
+    return build_groups(sel, group_cols, value_cols, start, feed, emit,
+                        _partials_schema(df, group_cols),
+                        max_groups_in_flight)
 
 
 def _sketch_table_schema(df: DataFrame, group_cols: list[str],
@@ -336,9 +438,6 @@ def _group_row(keys: list[str], group: pa.Table, blob_col: str = "sketch",
             **{col: fn(key[-1], sk) for col, _dtype, fn in readout or ()}}
 
 
-_NAN = object()  # one stand-in for every NaN key, which != itself
-
-
 def fold_groups(df: DataFrame, keys: list[str], order: list, row_fn,
                 schema: StructType, shuffle: bool = True) -> DataFrame:
     """The one partition-wise fold behind every sketch merge.
@@ -346,70 +445,43 @@ def fold_groups(df: DataFrame, keys: list[str], order: list, row_fn,
     ``repartition(keys)`` brings each group's rows into one partition
     and ``sortWithinPartitions(keys, order)`` makes them consecutive, in
     the caller's merge ``order`` (column names or sort expressions).
-    ONE ``mapInArrow`` task per partition then streams the groups:
-    ``row_fn(group)`` gets one group's rows as a ``pyarrow.Table`` and
-    returns its output rows as dicts of the non-key columns; each row's
-    key columns are copied from the group's first row as Arrow values,
-    never through Python objects, so timestamps, decimals and bigints
-    come out exactly as they went in. Only one group is held at a time,
-    even when it spans Arrow batches, as with a per-group
-    ``applyInPandas``, but the Python boundary is crossed once per
-    partition instead of once per group. ``shuffle=False`` folds each
-    partition as it stands, which is complete only when every group
-    already lives in one partition.
+    ONE ``mapInArrow`` task per partition then streams the groups,
+    which ``arrow_groups`` finds in each batch: ``row_fn(group)`` gets
+    one group's rows as a ``pyarrow.Table`` and returns its output rows
+    as dicts of the non-key columns; ``_rows_batch`` copies each row's
+    key columns from the group's first row as Arrow values. Only one
+    group is held at a time, even when it spans Arrow batches, as with
+    a per-group ``applyInPandas``, but the Python boundary is crossed
+    once per partition instead of once per group. ``shuffle=False``
+    folds each partition as it stands, which is complete only when
+    every group already lives in one partition.
     """
     if shuffle:
         df = df.repartition(*keys)
     df = df.sortWithinPartitions(*keys, *order)
     arrow_schema = to_arrow_schema(schema)
 
-    def to_batch(done: list, out_schema: pa.Schema) -> pa.RecordBatch:
-        # done: [(the group's first row, its output rows)]
-        cols = []
-        for f in out_schema:
-            if f.name in keys:
-                cols.append(pa.concat_arrays(
-                    [first.column(f.name) for first, rows in done
-                     for _ in rows]))
-            else:  # from_pandas: a NaN read-out becomes SQL NULL
-                cols.append(pa.array(
-                    [r[f.name] for _, rows in done for r in rows],
-                    type=f.type, from_pandas=True))
-        return pa.RecordBatch.from_arrays(cols, schema=out_schema)
+    def fold(parts: list) -> tuple:
+        return (parts[0].select(keys).slice(0, 1),
+                row_fn(pa.Table.from_batches(parts)))
 
     def sketch_fold(batches: Iterator[pa.RecordBatch]):
-        open_key, parts = None, []  # the open group's key and slices
-        out_schema = None
-
-        def fold(slices):
-            return slices[0].slice(0, 1), row_fn(pa.Table.from_batches(slices))
-
+        open_key, parts = None, []  # the open group's key and row runs
         for batch in batches:
-            if out_schema is None:
-                # key columns keep the type Spark sent them with (a
-                # timestamp carries the session time zone)
-                out_schema = pa.schema([
-                    batch.schema.field(f.name) if f.name in keys else f
-                    for f in arrow_schema])
-            done, start = [], 0  # start: the open group's first row
-            cols = [batch.column(k).to_pylist() for k in keys]
-            for i, key in enumerate(zip(*cols)):
-                key = tuple(_NAN if v != v else v for v in key)
-                if key == open_key:
-                    continue
-                if i > start:
-                    parts.append(batch.slice(start, i - start))
-                if parts:
+            done = []
+            for key, rows in arrow_groups(batch, keys):
+                if parts and key != open_key:
                     done.append(fold(parts))
-                open_key, parts, start = key, [], i
-            if start < batch.num_rows:
-                parts.append(batch.slice(start))
+                    parts = []
+                # the sort makes each group one run of rows
+                open_key = key
+                parts.append(batch.slice(int(rows[0]), len(rows)))
             if any(rows for _, rows in done):
-                yield to_batch(done, out_schema)
+                yield _rows_batch(done, arrow_schema)
         if parts:
             done = [fold(parts)]
             if done[0][1]:
-                yield to_batch(done, out_schema)
+                yield _rows_batch(done, arrow_schema)
 
     return df.mapInArrow(sketch_fold, schema)
 

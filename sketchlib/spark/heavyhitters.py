@@ -27,16 +27,15 @@ per (partition, group). No token-level groupBy ever happens.
 from __future__ import annotations
 
 import heapq
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
 from sketchlib.core.serde import merge_blobs
-from sketchlib.spark.build import fold_groups, update_from_token_counts
+from sketchlib.spark.build import (build_groups, fold_groups,
+                                   update_from_token_counts)
 
 
 class SpaceSaving:
@@ -137,19 +136,15 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     partial CMS tables — strictly tighter per-partition overestimates;
     the add-merge of CU partials remains overestimate-only.
 
-    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
-    or 8192) bounds task memory on high-cardinality group keys exactly
-    like ``build_partials``: full states flush as extra partial rows.
+    ``max_groups_in_flight`` bounds task memory on high-cardinality
+    group keys exactly like ``build_partials`` (both run
+    ``build.build_groups``): full states flush as extra partial rows.
     Certification survives the split by pigeonhole — if a token's
     global count > N_total/capacity then some chunk has
     count_chunk > N_chunk/capacity, so that chunk's SpaceSaving
     retains it (same argument that covers the partition split). The
     final merge is order-free (CMS add + candidate-set union).
     """
-    import os
-    if max_groups_in_flight is None:
-        max_groups_in_flight = int(os.environ.get(
-            "SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
     sel = df.select(*group_cols, text_col)
     partial_schema = StructType(
         [f for f in sel.schema.fields if f.name in group_cols] + [
@@ -157,37 +152,21 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
             StructField("cands", ArrayType(StringType()), False),
         ])
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict = {}  # gkey -> [cms, SpaceSaving]
+    def start(key) -> list:
+        return [CountMinSketch(w, d, seed, conservative=conservative),
+                SpaceSaving(capacity)]
 
-        def emit():
-            rows = []
-            for gkey, (cms, ss) in acc.items():
-                # emit the ENTIRE summary (not a top-C cut — cutting by
-                # local count would reintroduce the heuristic this
-                # replaces)
-                rows.append((*gkey, cms.to_bytes(),
-                             sorted(t for t, _, _ in ss.items())))
-            return pd.DataFrame(rows,
-                                columns=[*group_cols, "cms", "cands"])
+    def feed(state, rows) -> None:
+        update_from_token_counts(state[0], state[1], rows[text_col])
 
-        for pdf in batches:
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                slot = acc.get(gkey)
-                if slot is None:
-                    slot = [CountMinSketch(w, d, seed, conservative=conservative),
-                            SpaceSaving(capacity)]
-                    acc[gkey] = slot
-                update_from_token_counts(slot[0], slot[1], sub[text_col])
-                if len(acc) >= max_groups_in_flight:
-                    yield emit()
-                    acc.clear()
-        if acc:
-            yield emit()
+    def emit(state, chunk: int) -> list:
+        # emit the ENTIRE summary (not a top-C cut — cutting by local
+        # count would reintroduce the heuristic this replaces)
+        return [{"cms": state[0].to_bytes(),
+                 "cands": sorted(t for t, _, _ in state[1].items())}]
 
-    partials = sel.mapInPandas(build, partial_schema)
+    partials = build_groups(sel, group_cols, [text_col], start, feed, emit,
+                            partial_schema, max_groups_in_flight)
 
     out_schema = StructType(
         [f for f in sel.schema.fields if f.name in group_cols] + [

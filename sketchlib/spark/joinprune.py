@@ -26,23 +26,23 @@ Scale notes (100 TB):
   the old driver-side OR loop was a memory/CPU funnel; the tree
   bounds every merge task's fan-in at ~sqrt(#partitions) and the
   collect at O(1).
-- The prune is one broadcast of the blob + an Arrow-batched
-  ``mapInPandas`` scan; no per-row Python. For a fact table that is
-  scanned anyway, the prune is bandwidth-bound, and every pruned row is
-  a row that skips the join shuffle.
+- The prune is one broadcast of the blob + an Arrow UDF over the key
+  column; no per-row Python. For a fact table that is scanned anyway,
+  the prune is bandwidth-bound, and every pruned row is a row that
+  skips the join shuffle.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from sketchlib.core.bloom import BloomFilter
 from sketchlib.core.params import bloom_params
+from sketchlib.spark.specs import SketchSpec
 
 _KEY = "__jp_key"
 
@@ -61,14 +61,14 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
     projection to unpersist after collecting (None when the caller
     supplied ``n_keys`` and no sizing count was needed).
 
-    Plan shape: pruned scan -> mapInPandas partial filters (one sparse
-    blob per input partition, merge_partials-shaped rows) -> the SAME
-    salted hierarchical merge tree the sketch build uses
-    (``build.merge_partials``, fanout="auto") -> one (sketch, n_rows)
-    row. No raw key ever shuffles; the driver never sees more than the
-    single merged blob.
+    Plan shape: pruned scan -> ``build.build_partials`` with one
+    ungrouped Bloom spec of fixed (m, k, seed) (one sparse blob per
+    input partition) -> the SAME salted hierarchical merge tree the
+    sketch build uses (``build.merge_partials``, fanout="auto") -> one
+    (sketch, n_rows) row. No raw key ever shuffles; the driver never
+    sees more than the single merged blob.
     """
-    from sketchlib.spark.build import merge_partials
+    from sketchlib.spark.build import build_partials, merge_partials
 
     keyed = _as_key(df, key_col, _KEY).select(_KEY).dropna()
     unpersist = None
@@ -85,24 +85,10 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
         n_keys = keyed.count()
     m, k = bloom_params(max(int(n_keys), 1), p)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sketchlib.spark.build import task_partition_id
-        pid = task_partition_id()
-        bf = BloomFilter(m, k, seed)
-        n = 0
-        for b in batches:
-            if len(b):
-                bf.update_batch(b[_KEY].to_numpy())
-                n += len(b)
-        if n:
-            yield pd.DataFrame({"g": [1], "sketch_name": ["key_bloom"],
-                                "partial": [bf.to_bytes()], "n_rows": [n],
-                                "partition_id": [pid], "chunk": [0]})
-
-    partials = keyed.mapInPandas(
-        fn, schema=("g int, sketch_name string, partial binary, "
-                    "n_rows long, partition_id int, chunk int"))
-    return merge_partials(partials, ["g"], fanout="auto"), unpersist
+    spec = SketchSpec("key_bloom", "bloom", _KEY,
+                      {"m": m, "k": k, "seed": seed})
+    partials = build_partials(keyed, [], [spec])
+    return merge_partials(partials, [], fanout="auto"), unpersist
 
 
 def build_key_bloom(df: DataFrame, key_col: str, p: float = 0.01,

@@ -395,23 +395,32 @@ class SketchTableSink:
                 parts, key=lambda pp: pp.getName()))
         return read_one(p)
 
-    def latest(self) -> dict | None:
-        """Highest version whose _COMMIT marker reads back as valid
-        JSON. An ABSENT or CORRUPT marker means the version never
-        committed (crash before or mid-commit) and is skipped; any
-        OTHER read error (throttling, network, permissions) RAISES —
-        treating a transient IO failure as "uncommitted" would fall
-        back to a stale base and silently drop committed batches."""
+    def _committed(self, v: int) -> dict | None:
+        """Version ``v``'s commit document, or None when ``v`` never
+        committed: its _COMMIT marker is ABSENT (crash before the
+        commit), does not parse as JSON (crash mid-write) or names
+        another batch. Any OTHER read error (throttling, network,
+        permissions) RAISES — treating a transient IO failure as
+        "uncommitted" would misread a committed version."""
         import json
+        text = self._marker_text(v)
+        if text is None:
+            return None
+        try:
+            doc = json.loads(text)
+        except ValueError:
+            return None
+        if isinstance(doc, dict) and int(doc.get("batch_id", -1)) == v:
+            return doc
+        return None
+
+    def latest(self) -> dict | None:
+        """The commit document of the highest committed version (see
+        ``_committed``); an IO error raises rather than fall back to a
+        stale base and silently drop committed batches."""
         for v in reversed(self._versions()):
-            text = self._marker_text(v)
-            if text is None:
-                continue  # never committed
-            try:
-                doc = json.loads(text)
-            except ValueError:
-                continue  # crash mid-marker-write: not committed
-            if int(doc.get("batch_id", -1)) == v:
+            doc = self._committed(v)
+            if doc is not None:
                 return doc
         return None
 
@@ -480,30 +489,14 @@ class SketchTableSink:
         crash-leftover uncommitted dir must not displace a committed
         rollback version from the keep window, so uncommitted dirs
         older than the newest commit are always deleted and the newest
-        ``keep_versions`` committed versions are kept."""
-        import json
+        ``keep_versions`` committed versions are kept. An IO error
+        while reading any marker aborts the whole pass before anything
+        is deleted: that version's commit status is unknown, and a
+        committed rollback version must never be taken for junk."""
         try:
             jvm, fs = self._fs()
             versions = self._versions()
-            committed_vs = []
-            for v in versions:
-                try:
-                    text = self._marker_text(v)
-                except Exception:
-                    # transient IO failure (throttling, network,
-                    # permissions): the version's commit status is
-                    # UNKNOWN — abort this prune pass entirely rather
-                    # than misclassify a committed rollback version as
-                    # junk and delete it (same rule latest() applies)
-                    return
-                if text is None:
-                    continue  # marker never written -> uncommitted
-                try:
-                    doc = json.loads(text)
-                except ValueError:
-                    continue  # crash mid-marker-write -> uncommitted
-                if int(doc.get("batch_id", -1)) == v:
-                    committed_vs.append(v)
+            committed_vs = [v for v in versions if self._committed(v)]
             keep = set(committed_vs[-self.keep_versions:])
             for v in versions:
                 if v < committed and v not in keep:

@@ -10,8 +10,10 @@ designed p — plus the false-negative check the reference lacks
 Architecture notes vs the reference:
 - The reference used a Spark accumulator in ``foreach``
   (main.py:17-24,172-176), which double-counts on task retry (wart
-  W5). We emit per-partition partial counts from ``mapInPandas`` and
-  sum them with a deterministic ``groupBy().sum()`` — exactly-once.
+  W5). We emit per-partition partial counts from ``mapInArrow`` (rows
+  grouped by ``build.arrow_groups``, the build's own exact-key
+  grouping) and sum them with a deterministic ``groupBy().sum()`` —
+  exactly-once.
 - The filters travel as a broadcast variable (the DataFrame-era
   version of the Hadoop side-file read, ValidationMapper.java:36-52).
   Total broadcast size = sum of m/8 over groups; bounded by design.
@@ -21,13 +23,14 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StructField, StructType
 
 from sketchlib.core.serde import sketch_from_bytes
-from sketchlib.spark.build import _norm_nan
+from sketchlib.spark.build import arrow_groups
 
 
 def collect_sketches(merged: DataFrame, group_cols: list[str],
@@ -102,18 +105,19 @@ def bloom_validate(df: DataFrame, filters: dict, group_cols: list[str],
         StructField("fp", LongType(), False),
     ])
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    arrow_schema = to_arrow_schema(counts_schema)
+
+    def probe(batches: Iterator[pa.RecordBatch]):
         from sketchlib.core import hashing
         local = {k: sketch_from_bytes(b) for k, b in bc.value.items()}
         # per-partition partial counters keyed by the *filter's* group
         agg = {k: [0, 0, 0, 0] for k in local}  # own, fn, probes, fp
         seeds = sorted({bf.seed for bf in local.values()})
-        for pdf in batches:
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if isinstance(gkey, tuple) and single:
-                    gkey = gkey[0]
-                gkey = _norm_nan(gkey)
-                vals = sub[value_col].dropna()
+        for batch in batches:
+            values = batch.column(value_col).to_pandas()
+            for key, rows in arrow_groups(batch, group_cols):
+                gkey = key[0] if single else key
+                vals = values.take(rows).dropna()
                 if not len(vals):
                     continue
                 # hash once per seed, not once per filter: the murmur
@@ -129,16 +133,15 @@ def bloom_validate(df: DataFrame, filters: dict, group_cols: list[str],
                     else:
                         slot[2] += len(vals)
                         slot[3] += hits
-        rows = []
-        for fkey, v in agg.items():
-            if any(v):
-                kt = fkey if isinstance(fkey, tuple) else (fkey,)
-                rows.append((*kt, *v))
+        rows = [(*(fkey if isinstance(fkey, tuple) else (fkey,)), *v)
+                for fkey, v in agg.items() if any(v)]
         if rows:
-            yield pd.DataFrame(rows, columns=[*group_cols, "own", "fn",
-                                              "probes", "fp"])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, type=f.type)
+                 for col, f in zip(zip(*rows), arrow_schema)],
+                schema=arrow_schema)
 
-    partials = sel.mapInPandas(probe, counts_schema)
+    partials = sel.mapInArrow(probe, counts_schema)
     return (partials.groupBy(*group_cols)
             .agg(F.sum("own").alias("n_keys"),
                  F.sum("fn").alias("false_negatives"),

@@ -195,6 +195,58 @@ def test_sketch_table_uncommitted_version_is_invisible(spark, pages_tiny,
     shutil.rmtree(tbl)
 
 
+def test_sketch_table_crash_before_marker_rename_replays(spark, pages_tiny,
+                                                        tmp_path):
+    """A crash between the marker's delete and its rename leaves the
+    version's parquet data and _COMMIT.tmp but no _COMMIT: latest()
+    must not see that version, and replaying its batch id (as a
+    restarted query does) commits it, with lattice sketches bitwise
+    equal to one batch build over all the rows."""
+    import pyspark.sql.functions as F
+    from sketchlib.spark.streaming import SketchTableSink
+    tbl = str(tmp_path / "sktbl4")
+    sink = SketchTableSink(spark, tbl, ["lang"], SPECS)
+    even = F.coalesce(F.length("url") % 2 == 0, F.lit(True))
+    first, rest = pages_tiny.filter(even), pages_tiny.filter(~even)
+    sink(first, 0)
+
+    class Crash(Exception):
+        pass
+
+    class CrashOnRename:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def rename(self, src, dst):
+            raise Crash
+
+    fs_of = sink._fs
+    sink._fs = lambda: (fs_of()[0], CrashOnRename(fs_of()[1]))
+    with pytest.raises(Crash):
+        sink(rest, 1)
+    files = os.listdir(f"{tbl}/v=1")
+    assert "_COMMIT.tmp" in files and "_COMMIT" not in files
+    assert any(f.endswith(".parquet") for f in files)
+    assert sink.latest()["batch_id"] == 0
+
+    replayed = SketchTableSink(spark, tbl, ["lang"], SPECS)
+    replayed(rest, 1)
+    assert replayed.latest()["batch_id"] == 1
+    table = replayed.read_table().collect()
+    got = {(r["lang"], r["sketch_name"]): bytes(r["sketch"]) for r in table}
+    want = {(r["lang"], r["sketch_name"]): bytes(r["sketch"])
+            for r in build_sketches(pages_tiny, ["lang"], SPECS).collect()}
+    assert got.keys() == want.keys()
+    for key, blob in want.items():
+        if key[1] in ("b", "h"):  # the lattice kernels
+            assert got[key] == blob, key
+    assert sum(r["n_rows"] for r in table
+               if r["sketch_name"] == "b") == pages_tiny.count()
+
+
 def test_sketch_table_prune_counts_committed_only(spark, pages_tiny,
                                                   tmp_path):
     """Retention (keep_versions) must count COMMITTED versions: a
